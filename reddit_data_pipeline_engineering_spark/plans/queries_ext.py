@@ -575,7 +575,7 @@ def q_time_bucket_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     # min(ts) bound folded into the plan as a broadcast 1-row scalar
-    # (same device as queries_streaming._with_min_ts) — one Spark job,
+    # (same device as queries_streaming._first_days) — one Spark job,
     # no driver-side .head() fetch.
     bound = ev.agg((F.min("ts") + F.expr("INTERVAL 2 DAYS")).alias("t_hi"))
     two_days = (

@@ -1,12 +1,27 @@
-"""Streaming kernel as a driver-registry query.
+"""The Structured Streaming legs of the driver registry.
 
-Materializes a raw NDJSON zone from the events table, drains it through
-the Structured Streaming marts kernel (watermarked cross-batch dedup,
-windowed static pivot, stream-static broadcast enrich, checkpointed
-parquet sink), and returns the sink contents.
+Each of the 15 legs is one operator over a raw NDJSON zone staged from the
+events table. A leg slices the first N days of events (``_first_days``),
+hands its batch DataFrames and its operator to ``_drain``, and reads its
+answer off the drained sink. ``_drain`` owns everything in between: the
+staging, the file-source read (streaming/kernel.py ``read_raw_stream``),
+the checkpointed parquet sink (``write_marts_stream``), the availableNow
+drain under a stateful-shuffle width sized from the staged bytes
+(``run_scaled_drain``) and the temp dirs. It picks the staging mode from
+the number of batches:
 
-Both queries carry REAL ``oracle_sql`` entries even though the stateful
-EXECUTION is not SQL-expressible — the final RELATIONS are:
+- ONE batch, holding the leg's far-future sentinel rows if it has any, is
+  a plain multi-part write read with no per-trigger file limit, so the
+  drain is ONE micro-batch. That is the sentinel invariant: a sentinel in
+  an early micro-batch would advance the watermark and silently drop the
+  remaining real events as late.
+- N batches are N single-part files ``b{i}.json`` with pinned, increasing
+  mtimes, read at ``maxFilesPerTrigger=1``, so they drain as N micro-
+  batches in order. That is how the stateful legs exercise cross-trigger
+  state carry, which their oracles replay batch by batch.
+
+Every leg carries a REAL ``oracle_sql`` entry even though the stateful
+EXECUTION is not SQL-expressible — the final RELATIONS are. Two examples:
 
 - the marts kernel's drained output is the windowed decimal-exact pivot
   + broadcast enrich of a deterministic input slice (the availableNow
@@ -20,14 +35,20 @@ EXECUTION is not SQL-expressible — the final RELATIONS are:
   pandas loop performs. (Ordering among equal (ts, value) rows cannot
   change the value sequence, so both engines emit the same multiset.)
 
-The batch-equivalence property is additionally asserted in
-tests/test_streaming.py::test_streaming_matches_batch.
+The batch-equivalence property of the streaming kernel is additionally
+asserted in tests/test_streaming.py (case ``streaming_matches_batch``).
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
+import itertools
 import os
+import shutil
 import tempfile
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,10 +60,20 @@ from reddit_data_pipeline_engineering_spark.plans.queries import (
     _pivot_cols_sql,
     query,
 )
+from reddit_data_pipeline_engineering_spark.plans.queries_ext import (
+    _HLL_ALPHA,
+    _HLL_LC_SQL,
+    _HLL_M,
+    _hll_estimate,
+    _hll_registers,
+    _hll_sketch_aggs,
+)
 from reddit_data_pipeline_engineering_spark.sources.tables import load_table
 from reddit_data_pipeline_engineering_spark.streaming.kernel import (
     read_raw_stream,
     run_scaled_drain,
+    sessionize_stream,
+    stream_stream_interval_join,
     streaming_marts,
     write_marts_stream,
 )
@@ -50,23 +81,128 @@ from reddit_data_pipeline_engineering_spark.streaming.pit import (
     pit_enrich_stream,
 )
 
-def _with_min_ts(ev: DataFrame) -> DataFrame:
-    """Attach the global ``min(ts)`` as a broadcast 1-row scalar column
-    ``t0`` — a cross join against a single-row aggregate, so the bound is
-    computed inside the plan instead of a driver-side ``.head()`` fetch
-    (one Spark job per query instead of two; VERDICT r02 #5)."""
-    return ev.crossJoin(F.broadcast(ev.agg(F.min("ts").alias("t0"))))
+_EVENT_COLS = ("event_id", "user_id", "ts", "event_type", "value")
+
+# Stateful-shuffle target for the six applyInPandasWithState legs: per-row
+# pandas cost dominates there and each partition holds ONE state store, so
+# they split at 32 KiB of staged NDJSON instead of the 1 MiB default.
+_PANDAS_STATE_BYTES = 32 << 10
+
+# Timestamps the PIT and TWA legs stage themselves, as epoch micros against
+# the TIMESTAMP_NTZ epoch: instant-exact in any session time zone.
+_NTZ_EPOCH = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+
+# Integer-quantized value (x10^4) staged by the two running-median legs.
+_V4 = "CAST(CAST(value AS DECIMAL(14,4)) * 10000 AS BIGINT) AS v4"
 
 
-_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("ts", T.StringType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
+def _first_days(spark: SparkSession, sf_dir: str, days: int) -> DataFrame:
+    """Events in ``[t0, t0 + days)``, ``t0 = min(ts)`` kept as a column.
+
+    The bound is a broadcast 1-row scalar cross-joined into the plan
+    instead of a driver-side ``.head()`` fetch (one Spark job per query
+    instead of two; VERDICT r02 #5)."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.crossJoin(F.broadcast(ev.agg(F.min("ts").alias("t0")))).filter(
+        F.col("ts") < F.col("t0") + F.expr(f"INTERVAL {days} DAYS")
+    )
+
+
+def _with_sentinels(batch: DataFrame, *rows: tuple) -> DataFrame:
+    """``batch`` plus far-future events ``(event_id, user_id, event_type,
+    value)`` at ts 2030-01-01, cut to ``batch``'s columns.
+
+    Drained in the same micro-batch as the slice, they push the watermark
+    past every real event, so every window, session and pair is emitted
+    before the drain stops; the leg filters them out of the sink."""
+    far = batch.sparkSession.createDataFrame(
+        list(rows), "event_id long, user_id long, event_type string, value double"
+    ).withColumn("ts", F.lit("2030-01-01").cast("timestamp"))
+    return batch.unionByName(far.select(*batch.columns))
+
+
+def _halves(day: DataFrame, *cols) -> list[DataFrame]:
+    """A one-day slice as two batches of ``cols``, split at t0 + 12 hours;
+    drained in order, the second folds onto state carried from the
+    first."""
+    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
+    return [
+        day.filter(F.col("ts") < cut).select(*cols),
+        day.filter(F.col("ts") >= cut).select(*cols),
     ]
-)
+
+
+_root_lock = threading.Lock()
+_root: str | None = None  # per-process parent of every leg's sink dir
+_leg_ids = itertools.count()
+
+
+def _leg_dir() -> str:
+    """A fresh, not yet created dir path for one leg, under the
+    per-process root (made on first use, removed at interpreter exit)."""
+    global _root
+    with _root_lock:
+        if _root is None:
+            _root = tempfile.mkdtemp(prefix="rdpe_stream_")
+            atexit.register(shutil.rmtree, _root, True)
+        return os.path.join(_root, f"leg{next(_leg_ids)}")
+
+
+def _drain(
+    batches: list[DataFrame],
+    operator: Callable[[DataFrame], DataFrame],
+    target_bytes: int | None = None,
+) -> DataFrame:
+    """Stage ``batches`` as a raw NDJSON zone, drain ``operator`` over it
+    as an availableNow stream and return the sink's contents.
+
+    One batch drains as one micro-batch, N batches as N in staging order
+    (module docstring). Timestamp columns stage as the epoch micros of
+    their instant in the session time zone and reach ``operator`` as
+    TIMESTAMP. ``target_bytes`` passes to ``run_scaled_drain``, which is
+    looked up as a module global at call time so a caller can wrap it.
+
+    The staging and checkpoint dirs are removed as soon as the drain ends.
+    The sink dir stays, because the returned DataFrame reads it lazily; it
+    lives in the leg's dir under the per-process root (``_leg_dir``).
+    Each call gets its own dirs, so concurrent calls are safe."""
+    leg = _leg_dir()
+    work, out = os.path.join(leg, "work"), os.path.join(leg, "out")
+    raw, ckpt = os.path.join(work, "raw"), os.path.join(work, "ckpt")
+    spark = batches[0].sparkSession
+    ts_cols = [
+        f.name
+        for f in batches[0].schema.fields
+        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
+    ]
+    encode = {c: F.unix_micros(F.col(c).cast("timestamp")) for c in ts_cols}
+    staged = [b.withColumns(encode) for b in batches]
+    try:
+        if len(staged) == 1:
+            staged[0].write.json(raw)
+        else:
+            os.makedirs(raw)
+            for i, batch in enumerate(staged):
+                stage = os.path.join(work, f"stage{i}")
+                batch.coalesce(1).write.json(stage)
+                (part,) = glob.glob(os.path.join(stage, "part-*.json"))
+                path = os.path.join(raw, f"b{i}.json")
+                os.rename(part, path)
+                mtime = 1_700_000_000 + i
+                os.utime(path, (mtime, mtime))
+        stream = read_raw_stream(
+            spark, raw, staged[0].schema, None if len(staged) == 1 else 1
+        ).withColumns({c: F.timestamp_micros(c) for c in ts_cols})
+        result = operator(stream)
+        run_scaled_drain(
+            spark,
+            raw,
+            lambda: write_marts_stream(result, out, ckpt),
+            target_bytes=target_bytes,
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return spark.read.parquet(out)
 
 
 # Hourly tumbling window via epoch arithmetic (same idiom as the
@@ -109,51 +245,29 @@ LEFT JOIN customer c ON CAST(c.c_custkey AS VARCHAR) = CAST(w.user_id AS VARCHAR
     tags=("streaming", "kernel"),
 )
 def q_streaming_marts_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
     # First week of events keeps the raw-zone materialization cheap at any
-    # sf; the sentinel (far-future event) advances the watermark so every
-    # real window is emitted before the availableNow drain stops.
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        "event_type",
-        "value",
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, -1, "2030-01-01T00:00:00.000000", "sentinel", 0.0)], _STREAM_SCHEMA
-    )
-
-    tmp = tempfile.mkdtemp(prefix="rdpe_streamq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinel).write.mode("overwrite").json(raw)
-
-    # Pin the availableNow drain to ONE micro-batch (maxFilesPerTrigger
-    # far above any part-file count): if the source ever split the drain,
-    # a far-future sentinel landing in an early batch would advance the
-    # watermark and silently drop the remaining real events as late.
-    stream = read_raw_stream(
-        spark, raw, _STREAM_SCHEMA, max_files_per_trigger=1_000_000
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    # sf; the sentinel advances the watermark so every real window is
+    # emitted before the availableNow drain stops.
+    week = _first_days(spark, sf_dir, 7).select(*_EVENT_COLS)
     cust = load_table(spark, sf_dir, "customer")
-    wide = streaming_marts(
-        stream,
-        cust,
-        entity_col="user_id",
-        ts_col="ts",
-        param_col="event_type",
-        value_col="value",
-        param_values=list(EVENT_TYPES),
-        dim_key="c_custkey",
-        dim_cols={"city_name": "c_name", "mktsegment": "c_mktsegment"},
-        watermark="2 hours",
-        window_duration="1 hour",
-        exact_decimal=DEC_VALUE,
+    wide = _drain(
+        [_with_sentinels(week, (-1, -1, "sentinel", 0.0))],
+        lambda stream: streaming_marts(
+            stream,
+            cust,
+            entity_col="user_id",
+            ts_col="ts",
+            param_col="event_type",
+            value_col="value",
+            param_values=list(EVENT_TYPES),
+            dim_key="c_custkey",
+            dim_cols={"city_name": "c_name", "mktsegment": "c_mktsegment"},
+            watermark="2 hours",
+            window_duration="1 hour",
+            exact_decimal=DEC_VALUE,
+        ),
     )
-    run_scaled_drain(spark, raw, lambda: write_marts_stream(wide, out, ckpt))
-    return spark.read.parquet(out).filter(F.col("location_id") != "-1")
+    return wide.filter(F.col("location_id") != "-1")
 
 
 # The recurrence replayed in SQL: per-user value sequence in the exact
@@ -203,62 +317,15 @@ def q_stateful_ema_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ema_stream,
     )
 
-    import glob
-
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_emaq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    # Two time-split micro-batch files built with SPARK writes (no rows
-    # ever reach the driver — the fold operator sorts by ts within each
-    # batch, so only the file split matters): first/second 12 hours of
-    # the day, each written as one JSON part and moved into the raw zone
-    # with a pinned mtime so maxFilesPerTrigger=1 drains them in order
-    # and the query itself exercises cross-batch state carry.
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate(
-        (F.col("ts") < cut, F.col("ts") >= cut)
-    ):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "user_id",
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias(
-                    "ts"
-                ),
-                "value",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, ts string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    # Two time-split micro-batches (first/second 12 hours of the day):
+    # the fold operator sorts by ts within each batch, so only the split
+    # matters, and the second batch exercises cross-batch state carry.
+    day = _first_days(spark, sf_dir, 1).filter(F.col("value").isNotNull())
+    return _drain(
+        _halves(day, "user_id", "ts", "value"),
+        lambda stream: ema_stream(stream, "user_id", "ts", "value", alpha=0.3),
+        target_bytes=_PANDAS_STATE_BYTES,
     )
-    q = lambda: (
-        ema_stream(stream, "user_id", "ts", "value", alpha=0.3)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out)
 
 
 # Streaming sessionization replayed in SQL: Spark's session_window merges
@@ -307,40 +374,14 @@ GROUP BY user_id, sid
     tags=("streaming", "stateful"),
 )
 def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.streaming.kernel import (
-        sessionize_stream,
+    week = _first_days(spark, sf_dir, 7).select(*_EVENT_COLS)
+    sessions = _drain(
+        [_with_sentinels(week, (-1, -1, "sentinel", 0.0))],
+        lambda stream: sessionize_stream(
+            stream, "user_id", "ts", gap="30 minutes", watermark="2 hours"
+        ),
     )
-
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        "event_type",
-        "value",
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, -1, "2030-01-01T00:00:00.000000", "sentinel", 0.0)],
-        _STREAM_SCHEMA,
-    )
-    tmp = tempfile.mkdtemp(prefix="rdpe_sessq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinel).write.mode("overwrite").json(raw)
-
-    # Pin the availableNow drain to ONE micro-batch (maxFilesPerTrigger
-    # far above any part-file count): if the source ever split the drain,
-    # a far-future sentinel landing in an early batch would advance the
-    # watermark and silently drop the remaining real events as late.
-    stream = read_raw_stream(
-        spark, raw, _STREAM_SCHEMA, max_files_per_trigger=1_000_000
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    sessions = sessionize_stream(
-        stream, "user_id", "ts", gap="30 minutes", watermark="2 hours"
-    )
-    run_scaled_drain(spark, raw, lambda: write_marts_stream(sessions, out, ckpt))
-    return spark.read.parquet(out).filter(F.col("user_id") != -1)
+    return sessions.filter(F.col("user_id") != -1)
 
 
 # Stream-stream interval join replayed in SQL: the drained inner-join
@@ -372,65 +413,38 @@ FROM e JOIN c ON e.user_id = c.user_id
 def _interval_join_query(
     spark: SparkSession, sf_dir: str, how: str
 ) -> DataFrame:
-    from reddit_data_pipeline_engineering_spark.streaming.kernel import (
-        stream_stream_interval_join,
-    )
+    week = _first_days(spark, sf_dir, 7).select(*_EVENT_COLS)
 
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        "event_type",
-        "value",
-    )
+    def join(stream: DataFrame) -> DataFrame:
+        left = stream.filter(F.col("event_type") == "error").select(
+            "user_id",
+            F.col("event_id").alias("error_id"),
+            F.col("ts").alias("error_ts"),
+        )
+        right = stream.filter(F.col("event_type") == "click").select(
+            "user_id",
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
+            F.col("value").alias("click_value"),
+        )
+        return stream_stream_interval_join(
+            left, right, key="user_id", left_ts="error_ts",
+            right_ts="click_ts", watermark="2 hours", within="24 hours",
+            how=how,
+        ).select(
+            F.col("l.user_id").alias("user_id"),
+            "error_id",
+            "error_ts",
+            "click_id",
+            "click_ts",
+            "click_value",
+        )
+
     # One sentinel PER SIDE: each filtered stream needs its own
     # max-event-time row to advance its watermark past every real pair.
-    sentinels = spark.createDataFrame(
-        [
-            (-1, -1, "2030-01-01T00:00:00.000000", "error", 0.0),
-            (-2, -1, "2030-01-01T00:00:00.000000", "click", 0.0),
-        ],
-        _STREAM_SCHEMA,
-    )
-    tmp = tempfile.mkdtemp(prefix="rdpe_ssjq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinels).write.mode("overwrite").json(raw)
-
-    # Pin the availableNow drain to ONE micro-batch (maxFilesPerTrigger
-    # far above any part-file count): if the source ever split the drain,
-    # a far-future sentinel landing in an early batch would advance the
-    # watermark and silently drop the remaining real events as late.
-    stream = read_raw_stream(
-        spark, raw, _STREAM_SCHEMA, max_files_per_trigger=1_000_000
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    left = stream.filter(F.col("event_type") == "error").select(
-        "user_id",
-        F.col("event_id").alias("error_id"),
-        F.col("ts").alias("error_ts"),
-    )
-    right = stream.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("value").alias("click_value"),
-    )
-    joined = stream_stream_interval_join(
-        left, right, key="user_id", left_ts="error_ts",
-        right_ts="click_ts", watermark="2 hours", within="24 hours",
-        how=how,
-    ).select(
-        F.col("l.user_id").alias("user_id"),
-        "error_id",
-        "error_ts",
-        "click_id",
-        "click_ts",
-        "click_value",
-    )
-    run_scaled_drain(spark, raw, lambda: write_marts_stream(joined, out, ckpt))
-    return spark.read.parquet(out).filter(F.col("user_id") != -1)
+    sentinels = ((-1, -1, "error", 0.0), (-2, -1, "click", 0.0))
+    joined = _drain([_with_sentinels(week, *sentinels)], join)
+    return joined.filter(F.col("user_id") != -1)
 
 
 @query(
@@ -524,64 +538,20 @@ def q_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         cusum_stream,
     )
 
-    import glob
-
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_cusumq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    # Two time-split micro-batch files, pinned mtimes so
-    # maxFilesPerTrigger=1 drains them in order (cross-batch state carry
-    # is exercised by construction — same staging as the EMA query).
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "user_id",
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias(
-                    "ts"
-                ),
-                "value",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, ts string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    q = lambda: (
-        cusum_stream(
+    # Same two time-split micro-batches as the EMA query.
+    day = _first_days(spark, sf_dir, 1).filter(F.col("value").isNotNull())
+    return _drain(
+        _halves(day, "user_id", "ts", "value"),
+        lambda stream: cusum_stream(
             stream,
             "user_id",
             "ts",
             "value",
             drift=_CUSUM_DRIFT,
             threshold=_CUSUM_THRESHOLD,
-        )
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        target_bytes=_PANDAS_STATE_BYTES,
     )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out)
 
 
 # --------------------------------------------------------------------------
@@ -593,15 +563,6 @@ def q_streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the same registers in batch SQL — the batch/stream equivalence that
 # makes sketch state trustworthy.
 # --------------------------------------------------------------------------
-
-from reddit_data_pipeline_engineering_spark.plans.queries_ext import (  # noqa: E402
-    _HLL_ALPHA,
-    _HLL_LC_SQL,
-    _HLL_M,
-    _hll_estimate,
-    _hll_registers,
-    _hll_sketch_aggs,
-)
 
 _STREAM_HLL_ORACLE = f"""
 WITH week AS (
@@ -665,51 +626,28 @@ ORDER BY c.window_start
     tags=("streaming", "sketch", "approx"),
 )
 def q_streaming_hll_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, "2030-01-01T00:00:00.000000")], "user_id long, ts string"
-    )
-    tmp = tempfile.mkdtemp(prefix="rdpe_hllq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinel).write.mode("overwrite").json(raw)
+    week = _first_days(spark, sf_dir, 7)
+    sentinel = (-1, -1, "sentinel", 0.0)
 
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, ts string")
-        .option("maxFilesPerTrigger", "1000000")  # single-batch drain
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
-    )
-    # Project the window first (event-time metadata rides the window
-    # struct), so the register builder can group by a plain column name.
-    swin = stream.select(F.window("ts", "1 hour").alias("window"), "user_id")
-    regs = _hll_registers(swin, "user_id", group_cols=("window",))
-    q = lambda: (
-        regs.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q)
+    def registers(stream: DataFrame) -> DataFrame:
+        # Project the window first (event-time metadata rides the window
+        # struct), so the register builder can group by a plain column name.
+        swin = stream.withWatermark("ts", "2 hours").select(
+            F.window("ts", "1 hour").alias("window"), "user_id"
+        )
+        return _hll_registers(swin, "user_id", group_cols=("window",))
+
     drained = (
-        spark.read.parquet(out)
+        _drain(
+            [_with_sentinels(week.select("user_id", "ts"), sentinel)],
+            registers,
+        )
         .select(F.col("window.start").alias("window_start"), "bucket", "r")
         .filter(F.col("window_start") < F.lit("2029-01-01").cast("timestamp"))
     )
     sketch = drained.groupBy("window_start").agg(*_hll_sketch_aggs())
     exact = (
-        _with_min_ts(ev)
-        .filter(F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS"))
-        .groupBy(F.window("ts", "1 hour").alias("w"))
+        week.groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.countDistinct("user_id").alias("exact_distinct"))
         .select(F.col("w.start").alias("window_start"), "exact_distinct")
     )
@@ -764,53 +702,16 @@ FROM day GROUP BY event_type ORDER BY event_type
     tags=("streaming", "stateful"),
 )
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-        "event_type",
-        "value",
+    day = _first_days(spark, sf_dir, 1).select(*_EVENT_COLS)
+    # Two IDENTICAL micro-batches: every event is a cross-batch duplicate.
+    deduped = _drain(
+        [day, day],
+        lambda stream: stream.withWatermark(
+            "ts", "48 hours"
+        ).dropDuplicatesWithinWatermark(["event_id"]),
     )
-    tmp = tempfile.mkdtemp(prefix="rdpe_sdedupq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    # Two IDENTICAL micro-batch files: every event is a cross-batch
-    # duplicate (pinned mtimes drain them in order).
-    for i in (0, 1):
-        stage = os.path.join(tmp, f"stage{i}")
-        day.coalesce(1).write.mode("overwrite").json(stage)
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    deduped = stream.withWatermark("ts", "48 hours").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    q = lambda: (
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q)
     return (
-        spark.read.parquet(out)
-        .groupBy("event_type")
+        deduped.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_unique_events"),
             F.sum(F.when(F.col("value").isNotNull(), 1).otherwise(0))
@@ -849,19 +750,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # micro-batch resolves versions map-side; the returned relation is the
 # bounded per-(segment, version) rollup of the drained sink.
 # --------------------------------------------------------------------------
-
-# Staged-NDJSON schema for the PIT stream: ts is epoch micros (long),
-# decoded with timestamp_micros() after the read — no string parsing,
-# no session-timezone dependence.
-_PIT_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("ts_us", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
 
 _PIT_STREAM_ORACLE = """
 WITH bounds AS (
@@ -929,30 +817,20 @@ def q_streaming_pit_enrich_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pit_enrich_drain(
     spark: SparkSession, sf_dir: str, max_broadcast_rows: int | None
 ) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
+    week = _first_days(spark, sf_dir, 7).select(
         "event_id",
         "user_id",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
+        F.expr(f"timestampdiff(MICROSECOND, {_NTZ_EPOCH}, ts)").alias("ts_us"),
         "event_type",
         "value",
     )
-
-    tmp = tempfile.mkdtemp(prefix="rdpe_pitstream_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.write.mode("overwrite").json(raw)
 
     # Two-version SCD2 dimension, cut at t0 + 3 days (computed in-plan
     # from the same broadcast scalar the stream slice used).
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    t0 = ev.agg(F.min("ts").alias("t0"))
+    t0 = load_table(spark, sf_dir, "events").agg(F.min("ts").alias("t0"))
     base = cust.crossJoin(F.broadcast(t0)).withColumn(
         "cut", F.col("t0") + F.expr("INTERVAL 3 DAYS")
     )
@@ -983,19 +861,6 @@ def _pit_enrich_drain(
             )
         )
     )
-
-    stream = (
-        spark.readStream.format("json")
-        .schema(_PIT_STREAM_SCHEMA)
-        .load(raw)
-        .withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts_us,"
-                " TIMESTAMP_NTZ'1970-01-01 00:00:00')"
-            ),
-        )
-    )
     # Dimension-size switch (VERDICT r06 #5): below the broadcast
     # threshold the dimension broadcasts (this scale); past it,
     # pit_enrich_stream tiles the SCD2 versions into (key, epoch-bucket)
@@ -1005,27 +870,23 @@ def _pit_enrich_drain(
     pit_kwargs = {}
     if max_broadcast_rows is not None:
         pit_kwargs["max_broadcast_rows"] = max_broadcast_rows
-    joined = pit_enrich_stream(
-        stream,
-        dim,
-        on="user_id",
-        ts_col="ts",
-        dim_rows=2 * cust.count(),
-        horizon_start="h_start",
-        horizon_end="h_end",
-        **pit_kwargs,
-    ).select("user_id", "value", "mktsegment", "version")
-    q = lambda: (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q)
+
+    def enrich(stream: DataFrame) -> DataFrame:
+        return pit_enrich_stream(
+            stream.withColumn(
+                "ts", F.expr(f"timestampadd(MICROSECOND, ts_us, {_NTZ_EPOCH})")
+            ),
+            dim,
+            on="user_id",
+            ts_col="ts",
+            dim_rows=2 * cust.count(),
+            horizon_start="h_start",
+            horizon_end="h_end",
+            **pit_kwargs,
+        ).select("user_id", "value", "mktsegment", "version")
+
     return (
-        spark.read.parquet(out)
+        _drain([week], enrich)
         .groupBy("mktsegment", "version")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1129,67 +990,24 @@ FROM ordered o JOIN seqs s USING (user_id, event_type)
     tags=("streaming", "stateful", "timeseries"),
 )
 def q_streaming_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from reddit_data_pipeline_engineering_spark.streaming.stateful import (
         twa_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_twaq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "user_id",
-                "event_type",
-                F.expr(
-                    "timestampdiff(MICROSECOND, "
-                    "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-                ).alias("t_us"),
-                "value",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, event_type string, t_us long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
-        .withColumn(
+    day = _first_days(spark, sf_dir, 1).filter(F.col("value").isNotNull())
+    t_us = F.expr(f"timestampdiff(MICROSECOND, {_NTZ_EPOCH}, ts)").alias("t_us")
+    return _drain(
+        _halves(day, "user_id", "event_type", t_us, "value"),
+        lambda stream: twa_stream(
+            stream.withColumn(
+                "ts", F.expr(f"timestampadd(MICROSECOND, t_us, {_NTZ_EPOCH})")
+            ).drop("t_us"),
+            ("user_id", "event_type"),
             "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, t_us, "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-        .drop("t_us")
+            "value",
+        ),
+        target_bytes=_PANDAS_STATE_BYTES,
     )
-    q = lambda: (
-        twa_stream(stream, ("user_id", "event_type"), "ts", "value")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out)
 
 
 # --------------------------------------------------------------------------
@@ -1261,51 +1079,17 @@ FROM sk ORDER BY event_type, batch_seq
     tags=("streaming", "stateful", "sketch"),
 )
 def q_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from reddit_data_pipeline_engineering_spark.streaming.stateful import (
         kmv_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("user_id").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_kmvq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select("event_type", "user_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
+    day = _first_days(spark, sf_dir, 1).filter(F.col("user_id").isNotNull())
+    drained = _drain(
+        _halves(day, "event_type", "user_id"),
+        lambda stream: kmv_stream(stream, "event_type", "user_id", k=8),
+        target_bytes=_PANDAS_STATE_BYTES,
     )
-    q = lambda: (
-        kmv_stream(stream, "event_type", "user_id", k=8)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out).orderBy("event_type", "batch_seq")
+    return drained.orderBy("event_type", "batch_seq")
 
 
 # --------------------------------------------------------------------------
@@ -1363,43 +1147,16 @@ ORDER BY window_start, rnk
 def q_streaming_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, sf_dir, "events")
-    week = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 7 DAYS")
-    ).select(
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("ts"),
-    )
-    sentinel = spark.createDataFrame(
-        [(-1, "2030-01-01T00:00:00.000000")], "user_id long, ts string"
-    )
-    tmp = tempfile.mkdtemp(prefix="rdpe_topkq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    week.unionByName(sentinel).write.mode("overwrite").json(raw)
+    def counts(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "2 hours")
+            .groupBy(F.window("ts", "1 hour").alias("window"), "user_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+        )
 
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long, ts string")
-        .option("maxFilesPerTrigger", "1000000")  # single-batch drain
-        .load(raw)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
-    )
-    counts = (
-        stream.groupBy(F.window("ts", "1 hour").alias("window"), "user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-    q = lambda: (
-        counts.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q)
+    week = _first_days(spark, sf_dir, 7).select("user_id", "ts")
     drained = (
-        spark.read.parquet(out)
+        _drain([_with_sentinels(week, (-1, -1, "sentinel", 0.0))], counts)
         .select(
             F.col("window.start").alias("window_start"),
             "user_id",
@@ -1485,56 +1242,17 @@ FROM med ORDER BY event_type, batch_seq
     tags=("streaming", "stateful"),
 )
 def q_streaming_running_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from reddit_data_pipeline_engineering_spark.streaming.stateful import (
         median_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_medq_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "event_type",
-                F.expr(
-                    "CAST(CAST(value AS DECIMAL(14,4)) * 10000 AS BIGINT)"
-                ).alias("v4"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("event_type string, v4 long")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
+    day = _first_days(spark, sf_dir, 1).filter(F.col("value").isNotNull())
+    drained = _drain(
+        _halves(day, "event_type", F.expr(_V4)),
+        lambda stream: median_stream(stream, "event_type", "v4"),
+        target_bytes=_PANDAS_STATE_BYTES,
     )
-    q = lambda: (
-        median_stream(stream, "event_type", "v4")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out).orderBy("event_type", "batch_seq")
+    return drained.orderBy("event_type", "batch_seq")
 
 
 # --------------------------------------------------------------------------
@@ -1618,53 +1336,14 @@ FROM med ORDER BY event_type, batch_seq
     tags=("streaming", "stateful", "sketch"),
 )
 def q_streaming_median_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from reddit_data_pipeline_engineering_spark.streaming.stateful import (
         median_sketch_stream,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    day = _with_min_ts(ev).filter(
-        F.col("ts") < F.col("t0") + F.expr("INTERVAL 1 DAYS")
-    ).filter(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="rdpe_medsk_")
-    raw, out, ckpt = (os.path.join(tmp, d) for d in ("raw", "out", "ckpt"))
-    os.makedirs(raw)
-    cut = F.col("t0") + F.expr("INTERVAL 12 HOURS")
-    for i, cond in enumerate((F.col("ts") < cut, F.col("ts") >= cut)):
-        stage = os.path.join(tmp, f"stage{i}")
-        (
-            day.filter(cond)
-            .select(
-                "event_type",
-                F.expr(
-                    "CAST(CAST(value AS DECIMAL(14,4)) * 10000 AS BIGINT)"
-                ).alias("v4"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .json(stage)
-        )
-        (part,) = glob.glob(os.path.join(stage, "part-*.json"))
-        p = os.path.join(raw, f"b{i}.json")
-        os.rename(part, p)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-
-    stream = (
-        spark.readStream.format("json")
-        .schema("event_type string, v4 long")
-        .option("maxFilesPerTrigger", "1")
-        .load(raw)
+    day = _first_days(spark, sf_dir, 1).filter(F.col("value").isNotNull())
+    drained = _drain(
+        _halves(day, "event_type", F.expr(_V4)),
+        lambda stream: median_sketch_stream(stream, "event_type", "v4"),
+        target_bytes=_PANDAS_STATE_BYTES,
     )
-    q = lambda: (
-        median_sketch_stream(stream, "event_type", "v4")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_scaled_drain(spark, raw, q, target_bytes=32 << 10)
-    return spark.read.parquet(out).orderBy("event_type", "batch_seq")
+    return drained.orderBy("event_type", "batch_seq")

@@ -200,23 +200,20 @@ def write_marts_stream(
     path: str,
     checkpoint: str,
     partition_cols: Sequence[str] = (),
-    output_mode: str = "append",
-    available_now: bool = True,
 ):
     """Partitioned parquet streaming sink with checkpointing (S8's streaming
-    form). ``available_now=True`` processes everything currently in the
-    source then stops — the incremental-batch trigger that replaces the
-    reference's Airflow-cron reprocessing."""
+    form), appended under an availableNow trigger: it processes everything
+    currently in the source then stops — the incremental-batch trigger that
+    replaces the reference's Airflow-cron reprocessing."""
     writer = (
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
+        .outputMode("append")
+        .trigger(availableNow=True)
     )
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     return writer.start()
 
 
@@ -225,7 +222,6 @@ def write_stream_upsert(
     path: str,
     checkpoint: str,
     partition_cols: Sequence[str],
-    available_now: bool = True,
     keys: Sequence[str] | None = None,
 ):
     """foreachBatch sink that upserts each micro-batch into a partitioned
@@ -272,14 +268,13 @@ def write_stream_upsert(
                 .parquet(path)
             )
 
-    writer = (
+    return (
         df.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_stream_to_completion(query, timeout_s: float = 120.0) -> None:
@@ -308,22 +303,17 @@ def scaled_state_partition_count(
 
         partitions = clamp(ceil(staged_bytes / target), 1, 3 * cores)
 
-    - ``target`` defaults to 1 MiB of staged NDJSON per partition — the
-      measured crossover on the bench data shape where per-partition
-      fixed cost exceeds the compute-parallelism gain; override with
-      ``RDPE_STREAM_STATE_TARGET_BYTES`` for production tuning (at a
-      real horizon volume the cap, not the target, binds).
+    - ``target`` is ``target_bytes``, by default 1 MiB of staged NDJSON
+      per partition — the measured crossover on the bench data shape
+      where per-partition fixed cost exceeds the compute-parallelism gain
+      (at a real horizon volume the cap, not the target, binds).
     - the cap is 3x ``defaultParallelism`` — the same multiple the
       cluster profile uses for batch shuffle partitions
       (session.cluster_profile), so at 100 TB this degrades to the
       standard sizing rather than a local constant; it also scales with
       the driver's lower-core bench legs automatically.
     """
-    target = int(
-        os.environ.get(
-            "RDPE_STREAM_STATE_TARGET_BYTES", target_bytes or (1 << 20)
-        )
-    )
+    target = target_bytes or (1 << 20)
     staged = 0
     for dirpath, _, filenames in os.walk(staged_path):
         for name in filenames:

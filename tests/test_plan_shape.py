@@ -739,3 +739,39 @@ def test_rfm_and_ntile_have_no_single_partition_window(spark):
     plan = plan_of(nt)
     assert "Window" in plan  # keyed local-rank + ties-by-value windows
     assert "Exchange SinglePartition" not in plan
+
+
+def test_streaming_staging_has_one_owner():
+    """Only plans/queries_streaming._drain (with its ``_leg_dir``) stages
+    and drains a stream: no
+    other plan code builds a readStream or writeStream, makes a temp dir
+    or pins a file mtime, so per-leg copies of the staging cannot grow
+    back. (Comments and docstrings may still name them.)"""
+    import ast
+    import pathlib
+
+    from reddit_data_pipeline_engineering_spark import plans
+
+    banned = {"readStream", "writeStream", "mkdtemp", "utime"}
+    hits = []
+    for path in sorted(pathlib.Path(plans.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = set()
+        if path.name == "queries_streaming.py":
+            owner = {
+                node
+                for fn in tree.body
+                if isinstance(fn, ast.FunctionDef)
+                and fn.name in ("_drain", "_leg_dir")
+                for node in ast.walk(fn)
+            }
+            assert owner, "the stage-and-drain helper moved"
+        for node in ast.walk(tree):
+            name = (
+                getattr(node, "attr", None)  # tempfile.mkdtemp, os.utime
+                or getattr(node, "id", None)  # a bare imported name
+                or (node.name if isinstance(node, ast.alias) else None)
+            )
+            if name in banned and node not in owner:
+                hits.append(f"{path.name}:{node.lineno} {name}")
+    assert not hits, hits

@@ -12,7 +12,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import functions as F
 
 
-def test_skyline_matches_dominance_bruteforce(spark):
+def test_skyline_matches_dominance_bruteforce(spark, tmp_path):
     """The running-max skyline must equal the textbook O(n^2) dominance
     filter on random points with heavy duplicates (min price, max size;
     dominated = other point <= price, >= size, strict somewhere)."""
@@ -43,9 +43,8 @@ def test_skyline_matches_dominance_bruteforce(spark):
 
     # Route the query through a temp parquet 'part' table.
     import os
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="rdpe_sky_")
+    tmp = str(tmp_path)
     spark.createDataFrame(
         [(i, f"n{i}", "b", "t", s, p) for i, (p, s) in enumerate(pts)],
         "p_partkey long, p_name string, p_brand string, p_type string, "
@@ -58,7 +57,7 @@ def test_skyline_matches_dominance_bruteforce(spark):
     assert got == expected
 
 
-def test_cusum_closed_form_matches_recurrence(spark):
+def test_cusum_closed_form_matches_recurrence(spark, tmp_path):
     """The prefix-sum closed form must replay the literal one-sided
     CUSUM recurrence s_i = max(0, s_{i-1} + (x_i - mean)) step by step
     (integer-scaled by n_days, per event type)."""
@@ -82,9 +81,8 @@ def test_cusum_closed_form_matches_recurrence(spark):
                 eid += 1
 
     import os
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="rdpe_cusum_")
+    tmp = str(tmp_path)
     spark.createDataFrame(
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -105,7 +103,7 @@ def test_cusum_closed_form_matches_recurrence(spark):
             assert got[(et, day)] == (n, s, s > 5 * D), (et, day)
 
 
-def test_peak_concurrency_matches_sweep_bruteforce(spark):
+def test_peak_concurrency_matches_sweep_bruteforce(spark, tmp_path):
     """Peak + earliest peak instant must match a per-microsecond brute
     sweep over random bursty timestamps (15-minute intervals, half-open
     [s, e) semantics)."""
@@ -127,9 +125,8 @@ def test_peak_concurrency_matches_sweep_bruteforce(spark):
         rows.append((i, ts, 1, "x", 1.0, "{}"))
 
     import os
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="rdpe_peak_")
+    tmp = str(tmp_path)
     spark.createDataFrame(
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, "

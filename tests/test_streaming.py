@@ -964,6 +964,64 @@ def _case_median_sketch_contract(spark, tmp):
             assert sketch_size < n // 3  # genuinely sub-linear
 
 
+def _case_drain_helper_modes_and_cleanup(spark, tmp):
+    """The registry legs' one stage-and-drain path
+    (plans/queries_streaming._drain): N batches drain as exactly N data
+    micro-batches in staging (pinned-mtime) order, one multi-part batch
+    as ONE micro-batch, timestamps round-trip exactly, and after the call
+    only the sink dir is left, under the per-process root."""
+    from urllib.parse import urlparse
+
+    from reddit_data_pipeline_engineering_spark.plans import (
+        queries_streaming as qs,
+    )
+
+    def batch(i, n):
+        return spark.range(n).select(
+            F.lit(i).alias("b"),
+            "id",
+            F.timestamp_micros(F.lit(1_700_000_000_000_000) + F.col("id")).alias(
+                "ts"
+            ),
+        )
+
+    # The drain goes through the module-global run_scaled_drain, so a
+    # wrapper there sees every started query (a timing hook relies on it).
+    started = []
+    real = qs.run_scaled_drain
+
+    def spy(spark_, staged, start_query, **kw):
+        def start():
+            started.append(start_query())
+            return started[-1]
+
+        return real(spark_, staged, start, **kw)
+
+    sizes = [3, 1, 2]  # not monotone: the order is the staging order
+    qs.run_scaled_drain = spy
+    try:
+        multi = qs._drain([batch(i, n) for i, n in enumerate(sizes)], lambda s: s)
+        single = qs._drain([batch(0, 4).repartition(3)], lambda s: s)
+    finally:
+        qs.run_scaled_drain = real
+
+    def data_batches(q):
+        return [p.numInputRows for p in q.recentProgress if p.numInputRows]
+
+    assert [data_batches(q) for q in started] == [sizes, [4]]
+    assert dict(multi.groupBy("b").count().collect()) == dict(enumerate(sizes))
+    assert dict(multi.dtypes)["ts"] == "timestamp"
+    expected = sorted(
+        tuple(r) for i, n in enumerate(sizes) for r in batch(i, n).collect()
+    )
+    assert sorted(tuple(r) for r in multi.collect()) == expected
+
+    for df in (multi, single):
+        (out,) = {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+        assert os.path.commonpath([out, qs._root]) == qs._root
+        assert os.listdir(os.path.dirname(out)) == ["out"]  # no raw/ckpt
+
+
 _CASES = {
     "streaming_matches_batch": _case_streaming_matches_batch,
     "median_sketch_contract": _case_median_sketch_contract,
@@ -987,6 +1045,7 @@ _CASES = {
     "median_stream_restart_from_checkpoint": (
         _case_median_stream_restart_from_checkpoint
     ),
+    "drain_helper_modes_and_cleanup": _case_drain_helper_modes_and_cleanup,
 }
 
 
@@ -1012,6 +1071,39 @@ def test_streaming_case(name, stream_outcomes):
     res = stream_outcomes[name]
     if res is not None:
         raise res
+
+
+def test_drain_leg_dirs_share_one_root_under_contention(monkeypatch):
+    """The first calls racing to make the per-process root of the
+    streaming legs' sink dirs must agree on ONE root, and every leg dir
+    must be unique: five rounds, each starting from no root, of 16
+    threads x 100 allocations under a tiny switch interval."""
+    import sys
+    import threading
+
+    from reddit_data_pipeline_engineering_spark.plans import (
+        queries_streaming as qs,
+    )
+
+    monkeypatch.setattr(qs, "_root", None)  # restored after the test
+    start = threading.Barrier(16)
+
+    def allocate(_):
+        start.wait(timeout=30)
+        return [qs._leg_dir() for _ in range(100)]
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(5):
+            qs._root = None
+            with ThreadPoolExecutor(max_workers=16) as ex:
+                futures = [ex.submit(allocate, i) for i in range(16)]
+                dirs = [d for f in futures for d in f.result(timeout=60)]
+            assert len(set(dirs)) == len(dirs) == 1600
+            assert {os.path.dirname(d) for d in dirs} == {qs._root}
+    finally:
+        sys.setswitchinterval(old)
 
 
 def test_duckdb_lambda_greatest_bug_workaround_pinned():
